@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+/** Full sweep of the declared queries on the shipped [[GraftSession]].
+  * Timed action (round 14): the query's own physical plan via
+  * [[FullExec.count]] — a bare df.count() re-optimizes with all columns
+  * pruned and ELIMINATES work-bearing operators outright (78/350 queries
+  * lose Join/Window/Aggregate/Generate nodes; see FullExec's scaladoc for
+  * the measured q_semdedup case). */
 object Bench {
-  /** Timed action (round 14): the query's own physical plan via
-    * [[FullExec.count]] — a bare df.count() re-optimizes with all
-    * columns pruned and ELIMINATES work-bearing operators outright
-    * (78/350 queries lose Join/Window/Aggregate/Generate nodes; see
-    * FullExec's scaladoc for the measured q_semdedup case). The env
-    * flag reproduces the legacy count() metric — and selects the legacy
-    * canary refs — for same-HEAD bridge runs only. Only the values
-    * "1"/"true" (case-insensitive) enable it (round-15 advisor fix:
-    * presence-only parsing made =0 silently select legacy refs). */
-  def legacyCount: Boolean =
-    sys.env.get("SPARK_GRAFT_BENCH_COUNT_LEGACY")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-  private def act(df: DataFrame): Long =
-    if (legacyCount) df.count() else FullExec.count(df)
   /** Canary set for contention normalization (round 11): same-HEAD bench
     * totals swing 95–128 s under host contention, so raw totals keep
     * getting re-adjudicated as phantom regressions. These 10 queries are
@@ -27,19 +18,6 @@ object Bench {
   val Canary: Seq[String] = Seq("q_tfidf", "q_pareto", "q_dedup_embed",
     "q_semdedup", "q_tpch_q18", "q_sparse_sim", "q_watermark_sim",
     "q_ngram_containment", "q_order_gaps", "q_dedup_survivor")
-
-  /** LEGACY canary reference costs, count()-action metric: mean of the
-    * r8/r9/r10 BENCH_FULL stamps (4.665 / 4.404 / 4.608 s). Used only
-    * under SPARK_GRAFT_BENCH_COUNT_LEGACY for bridge runs — the count
-    * action these were stamped under under-measures 78/350 queries
-    * (FullExec scaladoc). */
-  val CanaryRefSecondsLegacy: Double = 4.559
-  val CanaryRefLegacy: Map[String, Double] = Map(
-    "q_tfidf" -> 0.602612, "q_pareto" -> 0.287494,
-    "q_dedup_embed" -> 0.283926, "q_semdedup" -> 0.314308,
-    "q_tpch_q18" -> 0.492530, "q_sparse_sim" -> 0.489511,
-    "q_watermark_sim" -> 0.494553, "q_ngram_containment" -> 1.007462,
-    "q_order_gaps" -> 0.295633, "q_dedup_survivor" -> 0.290777)
 
   /** Canary reference costs under the round-14 FullExec action — the
     * same-HEAD re-derivation the action change REQUIRES (a ref stamped
@@ -66,14 +44,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-bench", s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session so timed numbers are steady-state execution, not
@@ -88,10 +59,8 @@ object Bench {
     // cold-start timings that aren't comparable to warmed runs.
     var warmFailures = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try act(fn(spark, warmDir)) catch { case _: Throwable => warmFailures += 1 }
+      try FullExec.count(fn(spark, warmDir)) catch { case _: Throwable => warmFailures += 1 }
     }
-    val refs = if (legacyCount) CanaryRefLegacy else CanaryRef
-    val refSeconds = if (legacyCount) CanaryRefSecondsLegacy else CanaryRefSeconds
     // best-of-2 per query (declared as "agg":"min" in the JSON): one timing
     // is hostage to GC pauses and OS scheduling noise — full-run totals
     // swing ±25% on an otherwise idle box — while the min of two runs is a
@@ -107,9 +76,9 @@ object Bench {
       sampleIdx += 1
       val t0 = System.nanoTime()
       try {
-        act(SparkEntry.queries(cq)(spark, sfDir))
+        FullExec.count(SparkEntry.queries(cq)(spark, sfDir))
         val t = (System.nanoTime() - t0) / 1e9
-        canarySamples += ((pos, cq, t, t / refs(cq)))
+        canarySamples += ((pos, cq, t, t / CanaryRef(cq)))
       } catch {
         // NonFatal only (round-13 advisor): an OOM/interrupt during a
         // sample must propagate, not vanish — a fatal error swallowed
@@ -125,7 +94,7 @@ object Bench {
       if (pos % CanarySampleEvery == 0) sampleCanary(pos)
       def once(): (Double, Option[String]) = {
         val t0 = System.nanoTime()
-        val err = try { act(fn(spark, sfDir)); None } catch {
+        val err = try { FullExec.count(fn(spark, sfDir)); None } catch {
           case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(200))
         }
         ((System.nanoTime() - t0) / 1e9, err)
@@ -170,7 +139,7 @@ object Bench {
     val nCanary = canaryTimes.size
     val canaryComplete = nCanary == Canary.size
     val normalized =
-      if (canaryComplete && canary > 0) total * (refSeconds / canary)
+      if (canaryComplete && canary > 0) total * (CanaryRefSeconds / canary)
       else total
     // Median contention factor: the GATE number uses only the ten
     // in-sweep best-of-2 canary runs (alphabetically spread through the
@@ -191,7 +160,7 @@ object Bench {
       }
     }
     val inSweepFactors = results.collect {
-      case (k, v, None) if canarySet(k) => v / refs(k) }
+      case (k, v, None) if canarySet(k) => v / CanaryRef(k) }
     val factorMedian = median(inSweepFactors)
     val normalizedMed =
       if (inSweepFactors.nonEmpty && factorMedian > 0) total / factorMedian
@@ -255,7 +224,7 @@ object Bench {
     }.mkString("[", ",", "]")
     val factorStats =
       s""""canary_factor_median":${f4(factorMedian)},"canary_factor_min":${f4(if (inSweepFactors.isEmpty) 1.0 else inSweepFactors.min)},"canary_factor_max":${f4(if (inSweepFactors.isEmpty) 1.0 else inSweepFactors.max)},"n_factor_samples":${inSweepFactors.size},"sample_factor_median":${f4(sampleMedian)},"n_burst_samples":${sampleFactors.size},"n_sample_errors":$sampleErrors,"normalized_total_med":$normalizedMed,"burst_disagreement":${f4(burstDisagreement)},"n_burst_windows":$nBurstWindows,"burst_window_seconds":${f4(burstWindowSeconds)},"normalized_total_windowed":${f4(windowedTotal)},"trend_eligible":$trendEligible"""
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":2,"agg":"min","canary":$canary,"canary_ref":$refSeconds,"action":"${if (legacyCount) "count_legacy" else "exec"}","n_canary":$nCanary,"canary_complete":$canaryComplete,"normalized_total":$normalized,$factorStats,"canary_samples":$samplesJson,"queries":$qs,"errors":$errs,"warm_failures":$warmFailures,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":2,"agg":"min","canary":$canary,"canary_ref":$CanaryRefSeconds,"action":"exec","n_canary":$nCanary,"canary_complete":$canaryComplete,"normalized_total":$normalized,$factorStats,"canary_samples":$samplesJson,"queries":$qs,"errors":$errs,"warm_failures":$warmFailures,"sf":"$sfDir"}"""
     println(fullLine)
     // The full line above is ~4 KB (one entry per query) and has outrun the
     // driver's captured output tail every round (BENCH_r01..r03 all record
@@ -277,7 +246,8 @@ object Bench {
     // are paid once by the first consumer's rep 1 and then best-of-2 `min`
     // drops them from every per-query figure and the total — the round-15
     // verdict's accounting gap. SessionCache records each winning build's
-    // wall-clock; "value" sums the builds keyed on the TIMED data dir (the
+    // wall-clock; "sec" (not "value": parsers of this output read "value"
+    // as the sweep total) sums the builds keyed on the TIMED data dir (the
     // warm pass at sf0.001 builds its own keys, reported but not summed),
     // so a cold-session sweep cost reconstructs as total + build_sec.
     val buildLog = graft.operators.SessionCache.buildLog
@@ -285,7 +255,7 @@ object Bench {
     val buildsJson = buildLog.toSeq.sortBy(-_._2).map { case (k, v) =>
       "\"" + jsonEscape(k) + "\":" + f4(v)
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"build_sec","value":${f4(timedBuilds.values.sum)},"unit":"sec","n_builds_timed_dir":${timedBuilds.size},"n_builds_total":${buildLog.size},"note":"first-payer shared-artifact builds excluded from best-of-2 minima; cold-session sweep ~= total + value","builds":$buildsJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"build_sec","sec":${f4(timedBuilds.values.sum)},"unit":"sec","n_builds_timed_dir":${timedBuilds.size},"n_builds_total":${buildLog.size},"note":"first-payer shared-artifact builds excluded from best-of-2 minima; cold-session sweep ~= total + sec","builds":$buildsJson,"sf":"$sfDir"}""")
     // And persist the complete per-query JSON as a file so round-over-round
     // deltas never depend on how much of stdout the driver kept. The forked
     // JVM's cwd is the sbt base directory, so the default lands in-repo and

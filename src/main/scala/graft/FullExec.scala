@@ -25,8 +25,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Numbers measured under this action are NOT comparable to the
   * count()-based stamps of rounds ≤ 13; BASELINE.md carries the
-  * same-HEAD bridge pair and Bench retains a legacy mode
-  * (SPARK_GRAFT_BENCH_COUNT_LEGACY=1) to reproduce the old metric. */
+  * same-HEAD bridge pair. */
 object FullExec {
   def count(df: DataFrame): Long = df.queryExecution.toRdd.count()
 }

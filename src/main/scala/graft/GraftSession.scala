@@ -1,15 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Session factory + SQL surface for the graft engine.
+/** The one session factory of the graft engine: the library, the tests and
+  * every harness (Bench, Verify, perfbench) build their session here, so
+  * the session that is benched is the session that ships.
   *
   * [[builder]] encodes the 100 TB posture as configuration: AQE on (runtime
   * shuffle coalescing, dynamic broadcast selection, skew-join splitting),
   * UTC semantics, and shuffle parallelism sized to the cluster instead of
   * Spark's legacy 200. On a real cluster only `master` and the partition
-  * count change; every operator in this library is written against plain
-  * `SparkSession`, so nothing else is environment-specific.
+  * count change. Apps that build their own session must set
+  * `spark.sql.extensions=graft.plans.GraftExtensions`: it is the only path
+  * that registers the library's planner strategy (TopKPerGroup).
   */
 object GraftSession {
 
@@ -20,8 +23,8 @@ object GraftSession {
     SparkSession.builder()
       .appName(appName)
       .master(master)
-      // custom planner strategies (TopKPerGroup) registered the
-      // deployment-grade way; see graft.plans.GraftExtensions
+      // the only registration of the custom planner strategy
+      // (TopKPerGroup) and SQL functions; see graft.plans.GraftExtensions
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -40,6 +43,4 @@ object GraftSession {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
       .foreach(t => Tables(spark, dir, t).createOrReplaceTempView(t))
-
-  def sql(spark: SparkSession, query: String): DataFrame = spark.sql(query)
 }

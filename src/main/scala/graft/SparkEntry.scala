@@ -725,10 +725,6 @@ object SparkEntry {
     val dim = graft.operators.SimilarityOps.EmbeddingDim
     val rounds = dim - 1
     val iters = graft.operators.SimilarityOps.JacobiSweeps * rounds
-    def r6(x: String) =
-      s"CAST(round(CAST($x AS DECIMAL(20,8)), 6) AS DOUBLE)"
-    def r4(x: String) =
-      s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
     val d1 = dim + 1
     "WITH RECURSIVE " +
       // exploded (vec_id, dim, value) view and the raw moment/mean pass
@@ -819,6 +815,13 @@ object SparkEntry {
   /** DuckDB twin of [[graft.functions.TextFunctions.md5Hash60]]. */
   private def md5h60(e: String): String =
     s"CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT)"
+
+  /** Oracle-side rounding barriers shared by every oracle query: a double
+    * rounded to 4 (stable4) or 6 (stable6) decimals through DECIMAL(20,8). */
+  private def r4(x: String): String =
+    s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
+  private def r6(x: String): String =
+    s"CAST(round(CAST($x AS DECIMAL(20,8)), 6) AS DOUBLE)"
 
   /** Shared shingle prefix: "t" tokens, "s" distinct word-3-gram arrays,
     * "x" exploded (doc_id, shingle) — the same formulation the passing
@@ -2239,7 +2242,6 @@ object SparkEntry {
     // t-closeness: TVD between class and global sensitive distributions,
     // all exact-integer count ratios
     "q_t_closeness" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH cells AS (SELECT c_nationkey AS nation, c_mktsegment AS segment, " +
         "CAST(floor(c_acctbal / 1000) AS BIGINT) AS bal_band, count(*) AS c " +
         "FROM customer GROUP BY 1, 2, 3), " +
@@ -2256,7 +2258,6 @@ object SparkEntry {
     },
     // Jarque-Bera: value-compressed central moments per source
     "q_jarque_bera" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH vc AS (SELECT source, n_chars AS v, count(*) AS c FROM documents GROUP BY 1, 2), " +
         "m AS (SELECT source, CAST(sum(c) AS BIGINT) AS n, " +
         "CAST(sum(v * c) AS DOUBLE) / sum(c) AS mu FROM vc GROUP BY 1), " +
@@ -2273,7 +2274,6 @@ object SparkEntry {
     },
     // Grubbs: integer-cents argmax deviation, DECIMAL power sum
     "q_grubbs" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH c AS (SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders), " +
         "m AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS s, " +
         "CAST(sum(CAST(cents AS HUGEINT) * cents) AS DOUBLE) AS s2 FROM c), " +
@@ -2287,7 +2287,6 @@ object SparkEntry {
     },
     // partial correlation over the |days|-bounded daily frame
     "q_partial_corr" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS DOUBLE) AS x, " +
         "CAST(sum(value) AS DOUBLE) AS y, CAST(count(DISTINCT user_id) AS DOUBLE) AS z " +
         "FROM events GROUP BY 1), " +
@@ -2306,7 +2305,6 @@ object SparkEntry {
     },
     // Friedman: per-day midranks on the 0-filled day x type grid
     "q_friedman" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH grid AS (SELECT day, event_type FROM " +
         "(SELECT DISTINCT CAST(ts AS DATE) AS day FROM events) " +
         "CROSS JOIN (SELECT DISTINCT event_type FROM events)), " +
@@ -2328,7 +2326,6 @@ object SparkEntry {
     },
     // CUSUM via the prefix-sum identity (two cumulative windows)
     "q_cusum" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS x " +
         "FROM events GROUP BY 1, 2), " +
         "st AS (SELECT event_type, CAST(sum(x) AS DOUBLE) / count(*) AS mu, " +
@@ -2348,7 +2345,6 @@ object SparkEntry {
     // EWMA control chart: first-element-seeded prefix folds (the proven
     // q_ema list_reduce contract) + 3-sigma limits
     "q_ewma_control" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day, CAST(count(*) AS DOUBLE) AS x " +
         "FROM events GROUP BY 1, 2), " +
         "arr AS (SELECT event_type, list(x ORDER BY day) AS vals, " +
@@ -2383,7 +2379,6 @@ object SparkEntry {
     // STL residual anomalies: lower-median + MAD on the x10^4 integer
     // residuals of the proven q_stl_decompose chain
     "q_stl_anomaly" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, round(SUM(value), 4) AS total " +
         "FROM events GROUP BY 1), " +
         "d2 AS (SELECT day, total, CAST(round(total * 10000) AS BIGINT) AS total_l FROM d), " +
@@ -2417,7 +2412,6 @@ object SparkEntry {
     },
     // Cronbach's alpha over the quality classifier's four features
     "q_cronbach_alpha" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH t AS (SELECT doc_id, " +
         "CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE) AS n_toks, " +
         "CAST(length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE) / len(regexp_split_to_array(trim(text), '\\s+')) AS awl, " +
@@ -2442,7 +2436,6 @@ object SparkEntry {
     },
     // character-class composition per source (exact integer count ratios)
     "q_char_profile" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH c AS (SELECT source, length(text) AS n_all, " +
         "length(regexp_replace(text, '[^a-z]', '', 'g')) AS n_letter, " +
         "length(regexp_replace(text, '[^ ]', '', 'g')) AS n_space, " +
@@ -2456,7 +2449,6 @@ object SparkEntry {
     },
     // CLV: integer-exact recency/frequency/monetary inputs, top-20
     "q_clv" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS d0 FROM orders), " +
         "per AS (SELECT o_custkey, count(*) AS frequency, " +
         "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS monetary_cents, " +
@@ -2469,7 +2461,6 @@ object SparkEntry {
     },
     // Chow structural break: centered-moment RSS per half vs pooled
     "q_chow_test" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, round(sum(value), 4) AS y FROM events GROUP BY 1), " +
         "ix AS (SELECT y, CAST(row_number() OVER (ORDER BY day) AS DOUBLE) AS x, count(*) OVER () AS n FROM d), " +
         "g AS (SELECT x, y, n, CASE WHEN x <= n // 2 THEN 1 ELSE 2 END AS regime FROM ix), " +
@@ -2487,7 +2478,6 @@ object SparkEntry {
     },
     // TOST equivalence of the first two sources' mean lengths
     "q_tost" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH m AS (SELECT source, CAST(count(*) AS BIGINT) AS n, CAST(sum(n_chars) AS BIGINT) AS s, " +
         "CAST(sum(n_chars * n_chars) AS BIGINT) AS s2 FROM documents WHERE source IN ('src0', 'src1') GROUP BY 1), " +
         "w AS (SELECT " +
@@ -2507,7 +2497,6 @@ object SparkEntry {
     },
     // ACF lags 1-3 + Durbin-Levinson PACF on the hourly series
     "q_acf_pacf" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH h AS (SELECT date_trunc('hour', ts) AS hr, CAST(count(*) AS DOUBLE) AS x FROM events GROUP BY 1), " +
         "mu AS (SELECT CAST(sum(x) AS DOUBLE) / count(*) AS m FROM h), " +
         "lagd AS (SELECT x - m AS d, " +
@@ -2527,7 +2516,6 @@ object SparkEntry {
     },
     // lag-1 Granger: restricted AR(1) vs two-predictor OLS by Cramer
     "q_granger" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS DOUBLE) AS x, round(sum(value), 4) AS y FROM events GROUP BY 1), " +
         "l AS (SELECT y, lag(y) OVER (ORDER BY day) AS z1, lag(x) OVER (ORDER BY day) AS z2 FROM d), " +
         "f AS (SELECT * FROM l WHERE z1 IS NOT NULL), " +
@@ -2547,7 +2535,6 @@ object SparkEntry {
     },
     // Cohen's d / Hedges' g per source vs rest (global-minus-source)
     "q_cohens_d" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n, CAST(sum(n_chars) AS BIGINT) AS s, " +
         "CAST(sum(n_chars * n_chars) AS BIGINT) AS s2 FROM documents GROUP BY 1), " +
         "g AS (SELECT CAST(sum(n) AS BIGINT) AS gn, CAST(sum(s) AS BIGINT) AS gs, CAST(sum(s2) AS BIGINT) AS gs2 FROM per), " +
@@ -2566,7 +2553,6 @@ object SparkEntry {
     },
     // conditional bigram entropy over within-doc adjacent pairs
     "q_entropy_rate" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH tok AS (SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS i FROM " +
         "(SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS arr FROM documents)), " +
         "pr AS (SELECT a.t AS w1, b.t AS w2 FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.i = a.i + 1), " +
@@ -2579,7 +2565,6 @@ object SparkEntry {
     },
     // within-doc hapax-legomena ratio averaged per source
     "q_hapax" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH tok AS (SELECT doc_id, source, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS t FROM documents), " +
         "c AS (SELECT doc_id, source, t, count(*) AS n FROM tok GROUP BY 1, 2, 3), " +
         "h AS (SELECT doc_id, source, CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS hr FROM c GROUP BY 1, 2) " +
@@ -2588,7 +2573,6 @@ object SparkEntry {
     },
     // day-over-day symmetric KL of the smoothed event-type mix
     "q_kl_drift" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, event_type, count(*) AS c FROM events GROUP BY 1, 2), " +
         "days AS (SELECT day, row_number() OVER (ORDER BY day) AS idx FROM (SELECT DISTINCT day FROM d)), " +
         "types AS (SELECT DISTINCT event_type FROM d), " +
@@ -2605,7 +2589,6 @@ object SparkEntry {
     },
     // per-subspace PQ quantization MSE on the proven unrolled-Lloyd model
     "q_pq_distortion" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH " + pqCtesBody(3, Some(5)) + ", " +
         "er AS (SELECT af.j, " +
         "list_sum(list_transform(range(1, 9), dd -> (af.s[CAST(dd AS INTEGER)] - m.cen[CAST(dd AS INTEGER)]) * (af.s[CAST(dd AS INTEGER)] - m.cen[CAST(dd AS INTEGER)]))) AS sqerr " +
@@ -2615,7 +2598,6 @@ object SparkEntry {
     },
     // Hill tail index over the top-100 order statistics (k+1-row take)
     "q_hill_tail" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH r AS (SELECT n_chars, row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rn FROM documents), " +
         // rn = 101 as a FILTER, not max(CASE...): on a corpus with fewer
         // than k+1 docs this CTE must be ZERO rows so the cross join
@@ -2630,7 +2612,6 @@ object SparkEntry {
     },
     // Gumbel method-of-moments on the daily block maxima
     "q_gumbel_fit" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH bm AS (SELECT CAST(ts AS DATE) AS day, max(value) AS mx FROM events GROUP BY 1), " +
         "m AS (SELECT CAST(count(*) AS BIGINT) AS n, avg(mx) AS mean, " +
         "sqrt((sum(mx * mx) - sum(mx) * sum(mx) / count(*)) / (count(*) - 1)) AS sd FROM bm) " +
@@ -2641,7 +2622,6 @@ object SparkEntry {
     },
     // running-record count vs the harmonic-number expectation
     "q_record_count" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, " +
         "CAST(round(round(sum(value), 4) * 10000) AS BIGINT) AS y FROM events GROUP BY 1), " +
         "w AS (SELECT day, y, max(y) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prevmax FROM d), " +
@@ -2653,7 +2633,6 @@ object SparkEntry {
     },
     // Wald-Wolfowitz runs test vs the exact lower median
     "q_runs_test" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, " +
         "CAST(round(round(sum(value), 4) * 10000) AS BIGINT) AS y FROM events GROUP BY 1), " +
         "vc AS (SELECT y AS v, count(*) AS c FROM d GROUP BY 1), " +
@@ -2671,7 +2650,6 @@ object SparkEntry {
     // Adamic-Adar on the link_predict candidate chain: round4-ed
     // 1/ln(deg) terms summed by the sorted first-element-seeded fold
     "q_adamic_adar" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH op AS (SELECT DISTINCT l_orderkey AS okey, l_partkey AS pkey FROM lineitem), " +
         "ok AS (SELECT okey FROM op GROUP BY okey HAVING COUNT(*) <= 64), " +
         "e AS (SELECT DISTINCT a.pkey AS src, b.pkey AS dst FROM op a " +
@@ -4689,7 +4667,6 @@ object SparkEntry {
     "q_wilson_ci" -> {
       import graft.operators.StatOps.{WilsonThreshold, WilsonZ}
       val zz = WilsonZ * WilsonZ
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val denom = s"(1.0 + $zz / nd)"
       val center = s"(p + $zz / (2.0 * nd)) / $denom"
       val half = s"$WilsonZ * sqrt(p * (1.0 - p) / nd + $zz / (4.0 * (nd * nd))) / $denom"
@@ -4803,7 +4780,6 @@ object SparkEntry {
     // ln-sum passes an 8-decimal barrier before exp (window sum order
     // differs between engines only at ULP; the barrier absorbs it)
     "q_kaplan_meier" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH u AS (SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts FROM events GROUP BY user_id), " +
         "h AS (SELECT max(ts) AS max_ts FROM events), " +
         "l AS (SELECT CAST(datediff('day', CAST(first_ts AS DATE), CAST(last_ts AS DATE)) AS BIGINT) AS t_days, " +
@@ -4819,7 +4795,6 @@ object SparkEntry {
     // burstiness: exact integer moments over hourly counts (zero hours
     // fold in arithmetically), two final divisions
     "q_burstiness" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val mean = "CAST(n_events AS DOUBLE) / n_hours"
       val varr = s"CAST(sum_c2 AS DOUBLE) / n_hours - ($mean) * ($mean)"
       "WITH hc AS (SELECT event_type, date_trunc('hour', ts) AS hr, COUNT(*) AS c FROM events GROUP BY 1, 2), " +
@@ -4860,7 +4835,6 @@ object SparkEntry {
     // is the identical q_knn_graph composition; reach/lrd/lof sums fold
     // in sorted order (list_reduce(list_sort) ≡ aggregate(sort_array))
     "q_lof" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH ann AS MATERIALIZED (" + ivfPqSql(k = 3, shortlist = 20, nq = None) + "), " +
         "ed AS MATERIALIZED (SELECT q_id, cand_id, greatest(0.0001, 1.0 - cos_sim) AS dist FROM ann), " +
         "kd AS (SELECT q_id, max(dist) AS kdist FROM ed GROUP BY q_id), " +
@@ -4878,7 +4852,6 @@ object SparkEntry {
     // Gini/Lorenz: cents-exact integer sums and rank products, one final
     // division per emitted ratio
     "q_gini" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH c AS (SELECT o_custkey, SUM(CAST(round(CAST(o_totalprice AS DECIMAL(20,8)) * 100, 0) AS BIGINT)) AS cents " +
         "FROM orders GROUP BY o_custkey), " +
         "r AS (SELECT o_custkey, cents, row_number() OVER (ORDER BY cents, o_custkey) AS i, " +
@@ -4899,18 +4872,16 @@ object SparkEntry {
     // CDC chunking: md5-60 rolling boundary on token 2-grams, integer
     // prefix-sum chunk ids, md5-60 chunk hashes counted corpus-wide
     "q_cdc_chunks" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
-      def h60(e: String) = s"CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT)"
       "WITH t AS (SELECT doc_id, source, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents), " +
         "p AS (SELECT doc_id, source, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos FROM t), " +
         "f AS (SELECT doc_id, source, pos, tok, CASE WHEN " +
         "lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) IS NOT NULL AND " +
-        h60("lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' || tok") +
+        md5h60("lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' || tok") +
         " % 16 = 0 THEN 1 ELSE 0 END AS boundary FROM p), " +
         "c AS (SELECT doc_id, source, pos, tok, " +
         "SUM(boundary) OVER (PARTITION BY doc_id ORDER BY pos) AS chunk_id FROM f), " +
         "g AS (SELECT doc_id, source, chunk_id, COUNT(*) AS n_tokens, " +
-        h60("string_agg(tok, ' ' ORDER BY pos)") + " AS chunk_hash " +
+        md5h60("string_agg(tok, ' ' ORDER BY pos)") + " AS chunk_hash " +
         "FROM c GROUP BY doc_id, source, chunk_id), " +
         "h AS (SELECT chunk_hash, COUNT(*) AS n_occ FROM g GROUP BY chunk_hash) " +
         "SELECT source, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs, " +
@@ -4924,7 +4895,6 @@ object SparkEntry {
     // squared distances with the proven list_sum accumulation pairing,
     // sorted-fold means
     "q_silhouette" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val dim = graft.operators.SimilarityOps.EmbeddingDim
       "WITH " + lloydCtesBody("") + ", " +
         "d2 AS (SELECT a.vec_id, a.cid, c.cid AS ccid, " +
@@ -4945,7 +4915,6 @@ object SparkEntry {
     // ARI: exact integer pair counting over the (cell, label) contingency
     // table from the same unrolled-Lloyd assignment
     "q_rand_index" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val c2n = "(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1) / 2)"
       val expected = s"CAST(suma AS DOUBLE) * CAST(sumb AS DOUBLE) / $c2n"
       val maxIdx = "(CAST(suma AS DOUBLE) + CAST(sumb AS DOUBLE)) / 2.0"
@@ -4964,7 +4933,6 @@ object SparkEntry {
     // SPRT: integer prefix counts per variant; the four log terms are
     // the driver-computed literals interpolated into both engines
     "q_sprt" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       import graft.operators.StatOps._
       "WITH wk AS (SELECT user_id % 2 AS variant, ts, event_id, " +
         s"CASE WHEN value > $SprtThreshold THEN 1 ELSE 0 END AS conv FROM events), " +
@@ -4989,7 +4957,6 @@ object SparkEntry {
     // every M-step statistic passes the stable6 two-stage barrier (the
     // unrolled-GD/Lloyd recipe), so all rounds replay bit-identically
     "q_em_gmm" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       def st6(x: String) = s"CAST(round(CAST(($x) AS DECIMAL(20,8)), 6) AS DOUBLE)"
       val s2raw = "sxx / n - (sx / n) * (sx / n)"
       val rounds = (1 to 5).map { t =>
@@ -5027,7 +4994,6 @@ object SparkEntry {
     // DiD: exact integer midpoint-day split, four cell means, one
     // closed-form assembly
     "q_diff_in_diff" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH mm AS (SELECT min(CAST(ts AS DATE)) AS min_d, max(CAST(ts AS DATE)) AS max_d FROM events), " +
         "f AS (SELECT user_id % 2 AS treat, " +
         "CASE WHEN CAST(ts AS DATE) >= min_d + CAST(datediff('day', min_d, max_d) // 2 AS INTEGER) THEN 1 ELSE 0 END AS post, " +
@@ -5046,7 +5012,6 @@ object SparkEntry {
     // CUPED: per-user pre/post sums, pooled theta = cov/var from the
     // 5-number moment pass, adjusted means per variant
     "q_cuped" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val n = "CAST(n AS DOUBLE)"
       val covxy = s"sxy - sx * sy / $n"
       val varx = s"sxx - sx * sx / $n"
@@ -5072,7 +5037,6 @@ object SparkEntry {
     // AR(2) Yule-Walker from lead-window autocovariances of the daily
     // value series; degenerate denominators emit NULL on both engines
     "q_ar_fit" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val den = "g0 * g0 - g1 * g1"
       "WITH d AS (SELECT event_type, CAST(ts AS DATE) AS d, SUM(value) AS v " +
         "FROM events GROUP BY 1, 2), " +
@@ -5097,18 +5061,16 @@ object SparkEntry {
     // chunk CTEs as q_cdc_chunks, df-capped bucket self-join, exact
     // integer Jaccard up to one division; threshold on the ROUNDED value
     "q_dedup_cdc" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
-      def h60(e: String) = s"CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT)"
       "WITH t AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents), " +
         "p AS (SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos FROM t), " +
         "f AS (SELECT doc_id, pos, tok, CASE WHEN " +
         "lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) IS NOT NULL AND " +
-        h60("lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' || tok") +
+        md5h60("lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' || tok") +
         " % 16 = 0 THEN 1 ELSE 0 END AS boundary FROM p), " +
         "c AS (SELECT doc_id, pos, tok, " +
         "SUM(boundary) OVER (PARTITION BY doc_id ORDER BY pos) AS chunk_id FROM f), " +
         "g AS (SELECT doc_id, chunk_id, " +
-        h60("string_agg(tok, ' ' ORDER BY pos)") + " AS ch " +
+        md5h60("string_agg(tok, ' ' ORDER BY pos)") + " AS ch " +
         "FROM c GROUP BY doc_id, chunk_id), " +
         "dd AS MATERIALIZED (SELECT DISTINCT doc_id, ch FROM g), " +
         "capped AS (SELECT ch FROM dd GROUP BY ch HAVING COUNT(*) BETWEEN 2 AND 64), " +
@@ -5126,7 +5088,6 @@ object SparkEntry {
     // rank-sum AUC with midrank ties on the compressed score domain;
     // every midrank is a half-integer so the rank sum is float-exact
     "q_auc" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH s AS (SELECT CAST(embedding[1] AS DOUBLE) AS v, " +
         "CASE WHEN label = 1 THEN 1 ELSE 0 END AS pos FROM embeddings), " +
         "bv AS (SELECT v, COUNT(*) AS n_v, SUM(pos) AS n_pv FROM s GROUP BY v), " +
@@ -5145,7 +5106,6 @@ object SparkEntry {
     // Brown-Forsythe: lower-median centering (exact integer at cumulative
     // rank ceil(n/2)), integer z-moments, closed-form W on the k-row agg
     "q_levene" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH sv AS (SELECT source, n_chars AS v, COUNT(*) AS n_sv " +
         "FROM documents GROUP BY 1, 2), " +
         "c AS (SELECT source, v, n_sv, " +
@@ -5171,7 +5131,6 @@ object SparkEntry {
     // Box-Cox grid pinned to halves: sqrt/reciprocal transforms only
     // (IEEE-identical), one 12-statistic pass, LLs unpivoted per lambda
     "q_boxcox" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val ys = Seq(
         "-1.0" -> "(1.0 - 1.0 / x)",
         "-0.5" -> "((1.0 - 1.0 / sqrt(x)) * 2.0)",
@@ -5198,7 +5157,6 @@ object SparkEntry {
     // md5-randomization test: permutation r relabels by u(doc,r) < p_en;
     // group sums are exact integers so every comparison is bit-stable
     "q_permutation_test" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT doc_id, lang, n_chars FROM documents), " +
         "o AS (SELECT COUNT(*) AS n, " +
         "SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_en, " +
@@ -5226,7 +5184,6 @@ object SparkEntry {
     // Dirichlet-smoothed query likelihood: per-term tf as list_filter
     // lengths, ONE collection-stats row, chained fixed-order ln sum
     "q_query_likelihood" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val terms = graft.operators.RetrievalOps.QueryTerms
       val mu = graft.operators.RetrievalOps.DirichletMu
       val tfCols = terms.map(t =>
@@ -5246,7 +5203,6 @@ object SparkEntry {
     // zero cells contribute 0 (CASE keeps ln off the zero branch)
     "q_llr_colloc" -> {
       import graft.operators.TextOps.{LlrMinCount, LlrTopN}
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       def term(k: String, row: String, colm: String) =
         s"CASE WHEN $k > 0 THEN CAST($k AS DOUBLE) " +
           s"* ln(CAST($k AS DOUBLE) * nn / (CAST($row AS DOUBLE) * CAST($colm AS DOUBLE))) " +
@@ -5271,7 +5227,6 @@ object SparkEntry {
     // self-BLEU-2: id-successor pairs within source, clipped n-gram
     // precisions (exact-integer clips), brevity penalty on length ratio
     "q_self_bleu" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT doc_id, source, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents), " +
         "f AS (SELECT * FROM d WHERE len(toks) >= 2), " +
         "uc AS MATERIALIZED (SELECT doc_id, g, COUNT(*) AS c FROM " +
@@ -5301,7 +5256,6 @@ object SparkEntry {
     // PAV isotonic fit via the minimax closed form over the ≤10-bin
     // cumulative frame; same classifier CTEs as q_calibration
     "q_isotonic_cal" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH t AS (SELECT doc_id, " +
         "CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE) AS n_toks, " +
         "CAST(length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE) / len(regexp_split_to_array(trim(text), '\\s+')) AS awl, " +
@@ -5337,7 +5291,6 @@ object SparkEntry {
     // McNemar: per-doc correctness of both shipped lang classifiers
     // (same CTEs as q_lang_id / q_lang_trigram), one 5-counter row
     "q_mcnemar" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH t AS (SELECT doc_id, lang, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents), " +
         "hc AS (SELECT doc_id, lang, " +
         "CAST(len(list_filter(toks, x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'and')) AS INTEGER) AS en_n, " +
@@ -5401,7 +5354,6 @@ object SparkEntry {
     // VAD: the q_audio_trim voiced-window CTEs, then gaps-and-islands
     // (w - row_number() island keys) for segment count / longest run
     "q_audio_vad" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH t AS (SELECT doc_id, list_transform(regexp_split_to_array(trim(text), '\\s+'), " +
         "x -> length(x)) AS s FROM documents), " +
         "b AS (SELECT doc_id, CAST(len(s) // 16 AS INTEGER) AS nw, s FROM t), " +
@@ -5426,7 +5378,6 @@ object SparkEntry {
     // R/S analysis: integer within-block walks, exact block moments,
     // 3-point log-log fit on the ROUNDED per-n means
     "q_hurst" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val grid = graft.operators.EventOps.HurstWindows
         .map(n => s"($n)").mkString(", ")
       "WITH h AS (SELECT date_trunc('hour', ts) AS hr, COUNT(*) AS c FROM events GROUP BY 1), " +
@@ -5455,7 +5406,6 @@ object SparkEntry {
     // Kendall tau-b: all-pairs over the per-source profile (mean length
     // x max length), exact-integer concordance counts
     "q_kendall_tau" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH p AS (SELECT source, CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS x, MAX(n_chars) AS y " +
         "FROM documents GROUP BY source), " +
         "pr AS (SELECT a.x - b.x AS dx, CAST(a.y - b.y AS DOUBLE) AS dy " +
@@ -5473,7 +5423,6 @@ object SparkEntry {
     // Spearman rho: midranks (exact halves) over the same profile,
     // closed-form Pearson on the rank moments
     "q_spearman" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH p AS (SELECT source, CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS x, MAX(n_chars) AS y " +
         "FROM documents GROUP BY source), " +
         "rk AS (SELECT CAST(rank() OVER (ORDER BY x) AS DOUBLE) " +
@@ -5491,7 +5440,6 @@ object SparkEntry {
     },
     // total chi2 / dof / Cramer's V from the q_chi2 crosstab CTEs
     "q_cramers_v" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH ce AS (SELECT lang, source, COUNT(*) AS n FROM documents GROUP BY 1, 2), " +
         "rt AS (SELECT lang, SUM(n) AS row_n FROM ce GROUP BY 1), " +
         "ct AS (SELECT source, SUM(n) AS col_n FROM ce GROUP BY 1), " +
@@ -5510,7 +5458,6 @@ object SparkEntry {
     // Cohen's kappa: prediction-pair cells from the two lang-classifier
     // CTEs, exact-integer marginal products, three shared divisions
     "q_cohens_kappa" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH t AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents), " +
         "hc AS (SELECT doc_id, " +
         "CAST(len(list_filter(toks, x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'and')) AS INTEGER) AS en_n, " +
@@ -5550,7 +5497,6 @@ object SparkEntry {
     // per-node triangle counts joined onto degrees, exact integers up
     // to one division per node
     "q_clustering_coeff" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH op AS (SELECT DISTINCT l_orderkey AS okey, l_partkey AS pkey FROM lineitem), " +
         "ok AS (SELECT okey FROM op GROUP BY okey HAVING COUNT(*) <= 64), " +
         "e AS (SELECT DISTINCT a.pkey AS src, b.pkey AS dst FROM op a " +
@@ -5577,7 +5523,6 @@ object SparkEntry {
     // Newman modularity over the q_graph_lpa label CTEs: intra-edge and
     // degree-mass rollups per community, two divisions per community
     "q_modularity" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val roundsSql = (1 to 3).map { i =>
         s"v$i AS (SELECT u.dst AS node, l.label, COUNT(*) AS n " +
           s"FROM und u JOIN l${i - 1} l ON u.src = l.node GROUP BY 1, 2), " +
@@ -5612,7 +5557,6 @@ object SparkEntry {
     // Mann-Kendall: round4-barrier daily sums BEFORE any sign, exact
     // integer S and tie-corrected variance, continuity-corrected z
     "q_mann_kendall" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val vs = "CAST(n_days * (n_days - 1) * (2 * n_days + 5) - tie_sum AS DOUBLE) / 18.0"
       "WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
         r4("SUM(value)") + " AS v FROM events GROUP BY 1, 2), " +
@@ -5632,7 +5576,6 @@ object SparkEntry {
     // order, inlier band = RansacBandSds * sd, ties to lowest round
     "q_ransac" -> {
       import graft.operators.EventOps.{RansacRounds, RansacBandSds}
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       def h(salt: Int) =
         s"CAST(('0x' || substr(md5('ransac:' || CAST(r AS VARCHAR) || ':$salt'), 1, 6)) AS BIGINT)"
       "WITH daily AS (SELECT CAST(row_number() OVER (ORDER BY d) - 1 AS DOUBLE) AS x, y FROM " +
@@ -5657,7 +5600,6 @@ object SparkEntry {
     // Kruskal-Wallis: cents-quantized values (bounded rank domain),
     // midranks from one compressed cumulative, tie-corrected H
     "q_kruskal" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val nd = "CAST(n AS DOUBLE)"
       val hRaw = s"12.0 / ($nd * ($nd + 1.0)) * rr - 3.0 * ($nd + 1.0)"
       "WITH dd AS (SELECT event_type, CAST(round(CAST(value AS DECIMAL(20,8)), 2) AS DOUBLE) AS v FROM events), " +
@@ -5677,7 +5619,6 @@ object SparkEntry {
     },
     // log-log OLS per brand: one broadcast dim join + 6-moment agg
     "q_elasticity" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val nd = "CAST(n AS DOUBLE)"
       val covxy = s"sxy - sx * sy / $nd"
       val varx = s"sxx - sx * sx / $nd"
@@ -5694,7 +5635,6 @@ object SparkEntry {
     // pseudo-domain = source × md5-60 bucket (the DomainOps stand-in for
     // a url host); shared CTE for the three domain-curation oracles
     "q_domain_caps" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       s"WITH d AS ($domainDocsSql), " +
         "r AS (SELECT domain, doc_id, n_toks, " +
         "row_number() OVER (PARTITION BY domain ORDER BY n_chars DESC, doc_id) AS rn FROM d), " +
@@ -5709,7 +5649,6 @@ object SparkEntry {
         "FROM a ORDER BY domain"
     },
     "q_domain_mix" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       s"WITH d AS ($domainDocsSql), " +
         "c AS (SELECT domain, count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS n_tokens FROM d GROUP BY domain), " +
         "t AS (SELECT CAST(sum(n_tokens) AS DOUBLE) AS tot_tokens, " +
@@ -5721,7 +5660,6 @@ object SparkEntry {
         "FROM c CROSS JOIN t ORDER BY domain"
     },
     "q_domain_blocklist" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       def pred(kind: String, pat: String) = kind match {
         case "exact"  => s"domain = '$pat'"
         case "prefix" => s"domain LIKE '$pat%'"
@@ -5765,8 +5703,6 @@ object SparkEntry {
     // per-source z vs the corpus, p via the A&S 7.1.26 erfc polynomial
     // (identical Horner order), BH step-up via the backward-max window
     "q_bh_fdr" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
-      def r6(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 6) AS DOUBLE)"
       "WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_s, CAST(sum(n_chars) AS BIGINT) AS s_s FROM documents GROUP BY source), " +
         "g AS (SELECT CAST(count(*) AS BIGINT) AS n_g, CAST(sum(n_chars) AS BIGINT) AS s_g, " +
         "CAST(sum(CAST(n_chars AS HUGEINT) * n_chars) AS DOUBLE) AS s2_g FROM documents), " +
@@ -5787,7 +5723,6 @@ object SparkEntry {
         "FROM f ORDER BY p_rank"
     },
     "q_lognormal_fit" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH m AS (SELECT source, CAST(count(*) AS BIGINT) AS n, " +
         "avg(ln(CAST(n_chars AS DOUBLE))) AS mu, " +
         "sum(ln(CAST(n_chars AS DOUBLE)) * ln(CAST(n_chars AS DOUBLE))) AS s2, " +
@@ -5802,7 +5737,6 @@ object SparkEntry {
         "FROM v ORDER BY source"
     },
     "q_hoeffding_bound" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val eps = s"sqrt(${operators.InferenceOps.Ln2OverDelta} / (2.0 * CAST(n AS DOUBLE)))"
       s"WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n, " +
         s"CAST(sum(CASE WHEN n_chars < ${operators.InferenceOps.ShortDocChars} THEN 1 ELSE 0 END) AS BIGINT) AS n_short " +
@@ -5815,7 +5749,6 @@ object SparkEntry {
         "FROM c ORDER BY source"
     },
     "q_ljung_box" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val h = operators.SeriesOps.LjungBoxLags
       val lags = (1 to h)
         .map(k => s"lag(d, $k) OVER (ORDER BY hr) AS d$k").mkString(", ")
@@ -5833,7 +5766,6 @@ object SparkEntry {
         "FROM s WHERE den > 0"
     },
     "q_adf" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val sxx = "(sxx_raw - n * mx * mx)"
       val sxy = "(sxy_raw - n * mx * my)"
       val syy = "(syy_raw - n * my * my)"
@@ -5850,7 +5782,6 @@ object SparkEntry {
         "FROM m WHERE n > 2"
     },
     "q_variance_ratio" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val q = operators.SeriesOps.VrPeriod
       val var1 = "((s1 - n1 * m1 * m1) / (n1 - 1))"
       val varq = "((sq - nq * mq * mq) / (nq - 1))"
@@ -5867,7 +5798,6 @@ object SparkEntry {
     // identical association order for the cos/sin argument:
     // (2.0 * pi()) * ((k * t) / n)
     "q_periodogram" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val ang = "(2.0 * pi()) * ((CAST(k AS DOUBLE) * t) / nd)"
       "WITH hh AS (SELECT date_trunc('hour', ts) AS hr, CAST(count(*) AS DOUBLE) AS x FROM events GROUP BY 1), " +
         "mu AS (SELECT avg(x) AS m, count(*) AS n FROM hh), " +
@@ -5881,7 +5811,6 @@ object SparkEntry {
         "FROM a ORDER BY k"
     },
     "q_durbin_watson" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, sum(value) AS y FROM events GROUP BY 1), " +
         "i AS (SELECT day, y, CAST(row_number() OVER (ORDER BY day) - 1 AS DOUBLE) AS t FROM d), " +
         "m AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(t) AS mt, avg(y) AS my, " +
@@ -5894,7 +5823,6 @@ object SparkEntry {
         "FROM w"
     },
     "q_spectral_entropy" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val ang = "(2.0 * pi()) * ((CAST(k AS DOUBLE) * t) / nd)"
       "WITH hh AS (SELECT date_trunc('hour', ts) AS hr, CAST(count(*) AS DOUBLE) AS x FROM events GROUP BY 1), " +
         "mu AS (SELECT avg(x) AS m, count(*) AS n FROM hh), " +
@@ -5916,7 +5844,6 @@ object SparkEntry {
         "FROM ent CROSS JOIN dom"
     },
     "q_pettitt" -> {
-      def r6(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 6) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, round(sum(value), 4) AS y FROM events GROUP BY 1), " +
         "rk AS (SELECT day, y, rank() OVER (ORDER BY y) AS r_min, " +
         "count(*) OVER (PARTITION BY y) AS ties, count(*) OVER () AS n FROM d), " +
@@ -5929,7 +5856,6 @@ object SparkEntry {
         "FROM u ORDER BY abs(u_t) DESC, day LIMIT 1"
     },
     "q_cross_corr" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS DOUBLE) AS x, round(sum(value), 4) AS y FROM events GROUP BY 1), " +
         "idx AS (SELECT day, x, y, row_number() OVER (ORDER BY day) AS t FROM d), " +
         "m AS (SELECT avg(x) AS mx, avg(y) AS my, sum(x * x) AS sxx, sum(x) AS sx, " +
@@ -5942,7 +5868,6 @@ object SparkEntry {
         "FROM p CROSS JOIN mm GROUP BY lag ORDER BY lag"
     },
     "q_xi_corr" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       def dirSql(xc: String, yc: String, label: String) =
         s"SELECT '$label' AS direction, CAST(max(n) AS BIGINT) AS n_days, " +
           r4(s"CASE WHEN sum(l * (n - l)) > 0 THEN 1.0 - max(n) * sum(dr) / (2.0 * sum(l * (n - l))) END") + " AS xi " +
@@ -5957,8 +5882,6 @@ object SparkEntry {
         ") ORDER BY direction"
     },
     "q_wilcoxon_signed" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
-      def r6(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 6) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, " +
         "CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS clicks, " +
         "CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS views FROM events GROUP BY 1), " +
@@ -5981,7 +5904,6 @@ object SparkEntry {
         "FROM tt"
     },
     "q_theil_index" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val ratio = "(CAST(x AS DOUBLE) / (s / nd))"
       s"WITH d AS ($domainDocsSql), " +
         "per AS (SELECT domain, CAST(sum(n_toks) AS BIGINT) AS x FROM d GROUP BY domain HAVING sum(n_toks) > 0), " +
@@ -5996,7 +5918,6 @@ object SparkEntry {
     // both engines (Double.toString round-trips); the + chain is
     // left-associated identically
     "q_kpss" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val l = operators.SeriesOps.KpssLags
       val lagCols = (1 to l).map(k =>
         s"lag(e, $k) OVER (ORDER BY day) AS e$k").mkString(", ")
@@ -6017,7 +5938,6 @@ object SparkEntry {
         s"FROM v WHERE n > ${l + 1} AND g0 > 0 AND lrvn > 0"
     },
     "q_cochran_armitage" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val waves = operators.InferenceOps.TrendWaves
       "WITH f AS (SELECT user_id, event_type, ROW_NUMBER() OVER " +
         "(PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS rn FROM events), " +
@@ -6045,7 +5965,6 @@ object SparkEntry {
     // DECIMAL(38,0)) before ONE cast to double, so the variance float
     // chain starts bit-identical
     "q_bartlett" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val vi = "(s2 - CAST(s AS DOUBLE) * s / n_s) / (n_s - 1)"
       "WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_s, " +
         "CAST(sum(n_chars) AS BIGINT) AS s, " +
@@ -6064,7 +5983,6 @@ object SparkEntry {
         "FROM c WHERE k > 1 AND n_total > k"
     },
     "q_mood_median" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH byv AS (SELECT n_chars AS v, count(*) AS nv FROM documents GROUP BY 1), " +
         "tot0 AS (SELECT sum(nv) AS nn0 FROM byv), " +
         "cc AS (SELECT v, nv, nn0, sum(nv) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM byv CROSS JOIN tot0), " +
@@ -6086,7 +6004,6 @@ object SparkEntry {
         "FROM e ORDER BY source"
     },
     "q_max_drawdown" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day, sum(value) AS v FROM events GROUP BY 1, 2), " +
         "c AS (SELECT event_type, day, sum(v) OVER (PARTITION BY event_type ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM d), " +
         "p AS (SELECT event_type, cum, max(cum) OVER (PARTITION BY event_type ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak FROM c) " +
@@ -6100,7 +6017,6 @@ object SparkEntry {
     // final fold differs (per-node 1/d sum instead of per-seed counts)
     "q_harmonic_centrality" -> {
       import graft.operators.GraphOps.{BfsSeeds, BfsMaxHops, HarmonicTopN}
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val rounds = (1 to BfsMaxHops).map { t =>
         s"s$t AS MATERIALIZED (SELECT seed, node, MIN(dist) AS dist FROM " +
           s"(SELECT seed, node, dist FROM s${t - 1} " +
@@ -6127,7 +6043,6 @@ object SparkEntry {
     // sign arithmetic on the x10^4 longs of the round-4ed daily totals
     // (the stl determinism trick): the turn count is integer-exact
     "q_turning_points" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, round(sum(value), 4) AS y FROM events GROUP BY 1), " +
         "d2 AS (SELECT day, CAST(round(y * 10000) AS BIGINT) AS yl FROM d), " +
         "l AS (SELECT yl - lag(yl, 1) OVER (ORDER BY day) AS d1, " +
@@ -6144,7 +6059,6 @@ object SparkEntry {
     // variance ratios over the DECLARED stl components (all round-4ed
     // before this query's float chain starts)
     "q_seasonal_strength" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val vr = "((q_r - s_r * s_r / n) / (n - 1))"
       val vsr = "((q_sr - s_sr * s_sr / n) / (n - 1))"
       val vtr = "((q_tr - s_tr * s_tr / n) / (n - 1))"
@@ -6170,7 +6084,6 @@ object SparkEntry {
     },
     // the friedman midrank grid with a fixed alphabetical score vector
     "q_page_trend" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val el = "(n * k * (k + 1) * (k + 1) / 4.0)"
       val vl = "(n * k * k * (k + 1) * (k + 1) * (k - 1) / 144.0)"
       "WITH grid AS (SELECT day, event_type FROM " +
@@ -6195,7 +6108,6 @@ object SparkEntry {
     // pooled + within-sample midranks on the compressed (variant,
     // per-user count) grid; lawstat statistic form
     "q_brunner_munzel" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val se = "sqrt(n1 * s21 + n2 * s22)"
       "WITH pu AS (SELECT user_id % 2 AS g, count(*) AS v FROM events GROUP BY user_id), " +
         "bgv AS (SELECT g, v, count(*) AS c FROM pu GROUP BY 1, 2), " +
@@ -6219,7 +6131,6 @@ object SparkEntry {
         "FROM wide WHERE n1 > 1 AND n2 > 1"
     },
     "q_hoover" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val share = "(CAST(x AS DOUBLE) / s)"
       s"WITH d AS ($domainDocsSql), " +
         "per AS (SELECT domain, CAST(sum(n_toks) AS BIGINT) AS x FROM d GROUP BY domain HAVING sum(n_toks) > 0), " +
@@ -6233,7 +6144,6 @@ object SparkEntry {
     // the q_bm25 score chain cut to the top-10 feedback set, then
     // feedback-tf x corpus-idf expansion weights
     "q_rocchio_prf" -> {
-      def r4(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
       val stop = (operators.RetrievalOps.QueryTerms ++
         Seq("the", "a", "of", "and")).map(t => s"'$t'").mkString(", ")
       "WITH t AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents), " +

@@ -76,10 +76,13 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructT
   */
 object ExactPercentile {
 
-  /** Hard cap on rows any single driver collect may carry (histogram
-    * rows across all pending (group, p) items). 2ⁱ⁷ ≈ 131 k rows of
-    * (key, double, long) is ~a few MB — the same driver-model budget
-    * class as the k-means centroid collects. */
+  /** Cap on the in-window histogram rows of ONE pending (column, group, p)
+    * item. 2ⁱ⁷ ≈ 131 k rows of (key, double, long) is ~a few MB — the same
+    * driver-model budget class as the k-means centroid collects. The cap is
+    * enforced per item, and one histogram collect carries every pending
+    * item, so the worst-case driver pull is the cap times the item count:
+    * it multiplies with the number of groups and percentages, and with the
+    * number of fused specs in [[computeMulti]]. */
   val DefaultMaxPullRows: Int = 1 << 17
 
   /** Exact percentiles of `valueCol` at `ps` per distinct `groupCols` key.
@@ -116,8 +119,9 @@ object ExactPercentile {
     val nG = groupCols.size
     val vc = specs.indices.map(i => col(s"__v$i"))
     // keep a row iff ANY value column is non-null (for one column this is
-    // exactly the old single-column prefilter, so the scan predicate —
-    // and the plan — of every existing caller is unchanged)
+    // exactly the old single-column prefilter, so the results and the scan
+    // predicate of every existing caller are unchanged; pass 2 gains a
+    // no-op null filter on the selected value)
     val df = df0
       .select((gs ++ specs.zipWithIndex.map { case ((c, _), i) =>
         col(c).cast("double").as(s"__v$i") }): _*)

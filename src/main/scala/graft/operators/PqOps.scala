@@ -113,11 +113,11 @@ object PqOps {
   // dial...) — different scale dirs or dials never alias — dropped by
   // SessionCache.clearAll, and result-invisible: every consumer reads
   // bit-identical codebooks/codes.
-  private val sharedDf = new SessionCache[(SparkSession, String, String, Int)]()
+  private val sharedDf = new SessionCache[(SparkSession, String, String, Int), DataFrame]()
   private val sharedModel =
-    new SessionValueCache[(SparkSession, String, Int), Model]()
+    new SessionCache[(SparkSession, String, Int), Model]()
   private val sharedIndex =
-    new SessionValueCache[(SparkSession, String, Int, Int), IvfPqIndex]()
+    new SessionCache[(SparkSession, String, Int, Int), IvfPqIndex]()
 
   /** L2-normalized corpus vectors. Round 16 (advisor): NOT materialized
     * or session-cached — this is a full-corpus, embedding-width frame,

@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-
-/** Session-scoped keyed cache of [[Materialize]]d DataFrames, shared by
-  * operator families whose declared queries consume an identical expensive
-  * build (GraphOps' basket/edge tables, DedupOps' df-capped shingle
-  * survivors).
+/** Session-scoped keyed cache of shared artifacts: [[Materialize]]d
+  * DataFrames (`SessionCache[K, DataFrame]`, for GraphOps' basket/edge
+  * tables, DedupOps' df-capped shingle survivors) and driver-held trained
+  * models (k-means centroid arrays, PQ codebooks) that several declared
+  * queries consume identically from the same parquet input.
   *
   * NOT ConcurrentHashMap.computeIfAbsent: a builder may itself consult the
   * same cache under a different key (GraphOps' edges builder reads the
@@ -29,15 +28,15 @@ import org.apache.spark.sql.DataFrame
   * 10×/100× loop) also clear between datasets so finished checkpoint
   * blocks are released instead of staying pinned by the map.
   */
-final class SessionCache[K] {
-  private val map = new java.util.concurrent.ConcurrentHashMap[K, DataFrame]()
+final class SessionCache[K, V <: AnyRef] {
+  private val map = new java.util.concurrent.ConcurrentHashMap[K, V]()
   SessionCache.register(() => map.clear())
 
-  /** Cached lookup; `build` runs at most once per key per session, modulo
-    * a benign first-put-wins race. The builder is responsible for
-    * [[Materialize]]-ing what it returns (some builders checkpoint
-    * intermediate stages too, so the cache does not double-checkpoint). */
-  def getOrBuild(key: K)(build: => DataFrame): DataFrame = {
+  /** Cached lookup; `build` runs at most once per key per session. A
+    * DataFrame builder is responsible for [[Materialize]]-ing what it
+    * returns (some builders checkpoint intermediate stages too, so the
+    * cache does not double-checkpoint). */
+  def getOrBuild(key: K)(build: => V): V = {
     val cur = map.get(key)
     if (cur != null) cur
     else SessionCache.buildLock.synchronized {
@@ -48,35 +47,6 @@ final class SessionCache[K] {
       // the same or a sibling cache for a nested artifact) serializes
       // builds so a duplicate never starts; builds are rare and
       // session-scoped, so the serialization costs nothing measurable.
-      val again = map.get(key)
-      if (again != null) again
-      else {
-        val t0 = System.nanoTime()
-        val built = build
-        map.put(key, built)
-        SessionCache.recordBuild(key.toString, (System.nanoTime() - t0) / 1e9)
-        built
-      }
-    }
-  }
-
-  def clear(): Unit = map.clear()
-}
-
-/** [[SessionCache]] for NON-DataFrame session artifacts — the driver-held
-  * trained models (k-means centroid arrays, PQ codebooks) that several
-  * declared queries re-derive identically from the same parquet input
-  * (round 15). Same contract: deterministic content, get/putIfAbsent (no
-  * bin lock across a nested build), registered for [[SessionCache.clearAll]]
-  * so retry harnesses and multi-dataset loops drop it with everything else. */
-final class SessionValueCache[K, V <: AnyRef] {
-  private val map = new java.util.concurrent.ConcurrentHashMap[K, V]()
-  SessionCache.register(() => map.clear())
-
-  def getOrBuild(key: K)(build: => V): V = {
-    val cur = map.get(key)
-    if (cur != null) cur
-    else SessionCache.buildLock.synchronized {
       val again = map.get(key)
       if (again != null) again
       else {

@@ -7,13 +7,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.expressions._
 
 /** `SparkSessionExtensions` hook registering the library's custom planner
-  * pieces and SQL functions — the deployment-grade alternative to the
-  * runtime `experimental.extraStrategies` injection in [[TopK.perGroup]]
-  * (which remains as a fallback for sessions not built through this hook).
+  * pieces and SQL functions. It is the only registration path and it is
+  * required: [[TopK.perGroup]] does not plan without it.
   *
   * Wire it either way:
   *   - `GraftSession.builder(...)` applies it via `withExtensions`;
-  *   - external apps set `spark.sql.extensions=graft.plans.GraftExtensions`.
+  *   - apps that build their own session set
+  *     `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * Registered SQL functions (usable directly in `spark.sql`):
   * `vector_dot(a, b)`, `vector_norm(a)`, `vector_average(a, dim)`,

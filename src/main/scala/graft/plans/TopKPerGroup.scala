@@ -75,9 +75,8 @@ case class TopKPerGroupExec(groupCols: Seq[Expression], order: Seq[SortOrder],
     copy(child = newChild)
 }
 
-/** Planner strategy mapping the logical node to its exec. Injected at
-  * runtime via `spark.experimental.extraStrategies` (or register through
-  * SparkSessionExtensions in a deployed app). */
+/** Planner strategy mapping the logical node to its exec. Registered only
+  * through [[GraftExtensions]]. */
 object GraftStrategies extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroup(g, o, k, child) =>
@@ -89,13 +88,15 @@ object GraftStrategies extends org.apache.spark.sql.execution.SparkStrategy {
 /** Public API. */
 object TopK {
   /** Top-`k` rows per group under `orderBy` (column name → ascending?).
-    * Include a unique tie-break column for deterministic output. */
+    * Include a unique tie-break column for deterministic output.
+    *
+    * Requires [[GraftExtensions]] on the session: `GraftSession.builder`
+    * applies it; apps that build their own session set
+    * `spark.sql.extensions=graft.plans.GraftExtensions`. Without it the
+    * logical node has no strategy and planning fails. */
   def perGroup(df: DataFrame, groupCols: Seq[String],
       orderBy: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(GraftStrategies))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftStrategies
     val order = orderBy.map { case (name, asc) =>
       SortOrder(UnresolvedAttribute.quoted(name),
         if (asc) Ascending else Descending,

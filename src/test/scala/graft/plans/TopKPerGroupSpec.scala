@@ -34,9 +34,10 @@ class TopKPerGroupSpec extends SparkTestBase {
   }
 
   test("GraftExtensions plans the operator without the runtime fallback") {
-    // Build the logical node directly (bypassing TopK.perGroup, which also
-    // injects into experimental.extraStrategies) — planning must succeed
-    // purely through the SparkSessionExtensions-registered strategy.
+    // Build the logical node directly (bypassing TopK.perGroup) — planning
+    // must succeed purely through the SparkSessionExtensions-registered
+    // strategy. TopK.perGroup itself must not register a second path: it
+    // leaves experimental.extraStrategies empty.
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, NullsFirst, NullsLast, SortOrder}
     val saved = spark.experimental.extraStrategies
@@ -52,6 +53,10 @@ class TopKPerGroupSpec extends SparkTestBase {
       val df = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, node)
       assert(df.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
       assert(df.count() > 0)
+      val viaApi = TopK.perGroup(Tables.orders(spark, sf),
+        Seq("o_orderpriority"), Seq(("o_totalprice", false), ("o_orderkey", true)), 3)
+      assert(viaApi.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
+      assert(spark.experimental.extraStrategies.isEmpty)
     } finally spark.experimental.extraStrategies = saved
   }
 
